@@ -63,8 +63,9 @@ def main(argv=None):
                          f"{args.workload}-seed{args.seed}.json")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    # a fixed, pre-touched heap: the heap's share of peak RSS is then the
-    # same on every run, and peak_rss_mb moves with off-heap memory only
+    # a fixed, pre-touched heap is resident from the start, so VmHWM minus
+    # the heap is the off-heap peak (offheap_rss_mb); the heap the run keeps
+    # is measured on its own (retained_heap_mb)
     cmd = [build.java_bin(), f"-Xms{HEAP}", f"-Xmx{HEAP}",
            "-XX:+AlwaysPreTouch", "-Xss4m"]
     for o in ADD_OPENS:
@@ -80,7 +81,11 @@ def main(argv=None):
         "--size", args.size, "--work", work, "--spans", spans,
     ]
 
-    proc = subprocess.Popen(cmd, cwd=work, stdin=subprocess.DEVNULL,
+    # at most four glibc malloc arenas, as Hadoop's launch scripts set:
+    # with one arena per thread the off-heap peak swings by a sixth from
+    # run to run on the same inputs
+    env = dict(os.environ, MALLOC_ARENA_MAX="4")
+    proc = subprocess.Popen(cmd, cwd=work, env=env, stdin=subprocess.DEVNULL,
                             start_new_session=True)
 
     def stop(*_):

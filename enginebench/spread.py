@@ -3,11 +3,10 @@
     python3 enginebench/spread.py --workload trickle_merge --runs 10
     python3 enginebench/spread.py --workload bulk_replay --runs 5 --trace 1
 
-Runs the benchmark once per seed (seeds first-seed .. first-seed+runs-1,
-one run at a time) and prints, per metric, the median, the quartiles as
-statistics.quantiles(values, n=4) gives them, and the inter-quartile
-distance as a share of the median. Each run's result line is appended to
---out (JSON lines) so a set can be compared with another later.
+Runs the benchmark once per seed (seeds 1 .. runs, one run at a time, for
+BENCHMARK.json's run_seconds), prints each run's result line, then per
+metric the median, the quartiles as statistics.quantiles(values, n=4)
+gives them, and the inter-quartile distance as a share of the median.
 """
 
 import argparse
@@ -24,35 +23,25 @@ def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--runs", type=int, default=10)
-    p.add_argument("--first-seed", type=int, default=1)
-    p.add_argument("--seconds", type=int)
     p.add_argument("--trace", type=int, default=0, choices=(0, 1))
-    p.add_argument("--out")
     args = p.parse_args()
     root = os.path.dirname(HERE)
-    if args.seconds is None:
-        with open(os.path.join(root, "BENCHMARK.json")) as f:
-            args.seconds = json.load(f)["run_seconds"]
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        seconds = json.load(f)["run_seconds"]
 
     values = {}
-    for seed in range(args.first_seed, args.first_seed + args.runs):
+    for seed in range(1, args.runs + 1):
         cmd = [sys.executable, os.path.join(HERE, "run.py"),
                "--workload", args.workload, "--seed", str(seed),
-               "--seconds", str(args.seconds), "--trace", str(args.trace)]
+               "--seconds", str(seconds), "--trace", str(args.trace)]
         r = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
         if r.returncode != 0:
             print(f"seed {seed}: exit {r.returncode}\n{r.stderr[-2000:]}",
                   file=sys.stderr)
             sys.exit(1)
-        result = json.loads(r.stdout.strip().splitlines()[-1])
-        if args.out:
-            with open(args.out, "a") as f:
-                f.write(json.dumps({"workload": args.workload, "seed": seed,
-                                    "result": result}) + "\n")
-        print(f"seed {seed}: correct={result['correct']} " + " ".join(
-            f"{k}={v['value']:.6g}" for k, v in result["metrics"].items()),
-            flush=True)
-        for k, v in result["metrics"].items():
+        line = r.stdout.strip().splitlines()[-1]
+        print(f"seed {seed}: {line}", flush=True)
+        for k, v in json.loads(line)["metrics"].items():
             values.setdefault(k, []).append(v["value"])
 
     print(f"{'metric':40s} {'median':>12s} {'q1':>12s} {'q3':>12s} {'iqr/med':>8s}")

@@ -42,7 +42,7 @@ final case class Sizes(
 object Sizes {
   val full: Sizes = Sizes(
     bulkRepos = 500, bulkPaths = 400, bulkEpochEvents = 1100000L,
-    bulkEpochs = 2, bulkLookups = 8,
+    bulkEpochs = 2, bulkLookups = 16,
     trickleRepos = 100, tricklePaths = 200, tricklePreload = 20000L,
     trickleEpochEvents = 2000L, trickleRedeliver = 200L,
     trickleWarmSteps = 1, trickleMaxSteps = 400, trickleLookups = 4,
@@ -75,7 +75,8 @@ object MetricNames {
     "feed_rows_per_sec" -> "rows/s",
     "lookup_ms_p50" -> "ms",
     "bytes_written_per_event" -> "B/event",
-    "peak_rss_mb" -> "MiB")
+    "offheap_rss_mb" -> "MiB",
+    "retained_heap_mb" -> "MiB")
 
   val perLayer: Seq[(String, String)] = Seq(
     "log.rows_per_sec" -> "rows/s",
@@ -127,12 +128,31 @@ object Main {
     s
   }
 
+  private val MiB = 1024.0 * 1024.0
+
   /** peak resident set (VmHWM) of this JVM in MiB */
   def peakRssMb(): Double = {
     val src = scala.io.Source.fromFile("/proc/self/status")
     try src.getLines().find(_.startsWith("VmHWM:"))
       .map(_.replaceAll("[^0-9]", "").toDouble / 1024.0).getOrElse(Double.NaN)
     finally src.close()
+  }
+
+  private def heap = java.lang.management.ManagementFactory.getMemoryMXBean
+    .getHeapMemoryUsage
+
+  /** MiB of heap committed; run.py fixes it and pre-touches all of it, so
+    * it is resident throughout and VmHWM minus it is the off-heap peak */
+  def heapCommittedMb(): Double = heap.getCommitted / MiB
+
+  /** MiB of heap still in use after full collections, once Spark's
+    * ContextCleaner has dropped the broadcasts and shuffles the first one
+    * freed: what the run retains, not what it allocated on the way */
+  def retainedHeapMb(): Double = {
+    System.gc()
+    Thread.sleep(500)
+    System.gc()
+    heap.getUsed / MiB
   }
 
   def main(argv: Array[String]): Unit = {
@@ -159,12 +179,15 @@ object Main {
           ctx.checks.callsFailed += 1
           Result(0.0, 0.0, Map.empty, Map.empty, Nil)
       } finally ctx.tracer.foreach(_.stop())
-    val setupS = sessionS + result.setupS
-    val e2e: Map[String, Double] = result.endToEnd ++ Map(
-      "setup_s" -> setupS, "peak_rss_mb" -> peakRssMb())
-    val layer: Map[String, Double] = result.perLayer
+    val rssMb = peakRssMb()
+    // built only when shown: measuring the retained heap forces collections
+    val values: Map[String, Double] =
+      if (a.trace) result.perLayer
+      else result.endToEnd ++ Map("setup_s" -> (sessionS + result.setupS),
+        "offheap_rss_mb" -> (rssMb - heapCommittedMb()),
+        "retained_heap_mb" -> retainedHeapMb())
 
-    val heapMb = Runtime.getRuntime.maxMemory / (1024.0 * 1024.0)
+    val heapMb = Runtime.getRuntime.maxMemory / MiB
     val header = Map(
       "workload" -> a.workload, "seed" -> a.seed.toString,
       "seconds" -> a.seconds.toString, "trace" -> (if (a.trace) "1" else "0"),
@@ -186,10 +209,10 @@ object Main {
     result.report.foreach { case (name, (v, unit)) =>
       println(s"# metric $name ${Json.num(v)} $unit")
     }
+    println(s"# metric peak_rss_mb ${Json.num(rssMb)} MiB")
     println(s"# metric failed_ops_share ${Json.num(failedShare)} share")
     val shown: Seq[(String, String)] =
       if (a.trace) MetricNames.perLayer else MetricNames.endToEnd
-    val values = if (a.trace) layer else e2e
     if (a.trace) {
       println("# per-layer table (traced run)")
       shown.foreach { case (n, u) =>

@@ -324,10 +324,12 @@ object Workloads {
               rec.feeds)._1
           parent = Some(after)
         }
-        // the warm-up runs the lookups too (unchecked), so that timed
-        // lookups do not pay the lookup path's first compiles
+        // the warm-up runs four lookups (unchecked; two keys present, two
+        // absent), so that timed lookups do not pay the lookup path's
+        // first compiles
         val looks = ArrayBuffer.empty[LookupRec]
-        lookups(ctx, table, keys, traced(s.bulkEpochs - 1), looks)
+        lookups(ctx, table, if (clock.isDefined) keys else keys.take(4),
+          traced(s.bulkEpochs - 1), looks)
         if (clock.isDefined) {
           checkLookups(ctx, table, looks.toSeq)
           rec.looks ++= looks
