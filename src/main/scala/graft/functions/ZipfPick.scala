@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /**
  * Zipf-rank pick for the deterministic generator as a native codegen
- * Expression: `pickZipf(cdf, unit(h))` — uniform-in-[0,1) from the hash's
- * top 53 bits, then a BINARY SEARCH over the precomputed CDF. The pure-
+ * Expression: `pick(h, cdf)` — uniform-in-[0,1) from the hash's top 53
+ * bits, then a BINARY SEARCH over the precomputed CDF. The pure-
  * Column formulation (`size(filter(cdfArr, c => c < u))`) evaluates the
  * predicate for EVERY CDF entry per row and, because Catalyst does not CSE
  * across lambda boundaries, recomputes `u` inside each of those
@@ -53,11 +53,15 @@ case class ZipfPick(child: Expression, cdf: Seq[Double])
 
 object ZipfPick {
 
-  /** EXACTLY ChangeLogGen.eventAt's `pickZipf(cdf, unit(h))`: same
-    * top-53-bit uniform, same insertion-point handling — bit-identical
-    * rank selection (GeneratorParitySpec holds the two to equality). */
+  /** Uniform double in [0, 1) from a hash's top 53 bits. */
+  def unit(h: Long): Double = (h >>> 11).toDouble / (1L << 53).toDouble
+
+  /** The Zipf rank of hash `h`: the row-at-a-time oracle
+    * (ChangeLogGen.eventAt) and this expression both call it, so their
+    * rank selection is bit-identical by construction (GeneratorParitySpec
+    * stays as the backstop). */
   def pick(h: Long, cdf: Array[Double]): Int = {
-    val u = (h >>> 11).toDouble / (1L << 53).toDouble
+    val u = unit(h)
     val i = java.util.Arrays.binarySearch(cdf, u)
     if (i >= 0) i else math.min(cdf.length - 1, -i - 1)
   }

@@ -79,9 +79,10 @@ object Compaction {
         carried.size)
 
     // read IN PLACE per bucket (DSv2 bucket scan): the rewrite is then
-    // filter → write with ZERO shuffle — each bucket's task reads its own
-    // files and writes its own compacted file (alignedByBucket skips the
-    // repartition). At 100 TB compaction moves no rows across the network.
+    // filter → write with ZERO shuffle — each bucket's files are read and
+    // rewritten as one compacted file by a single task (alignedByBucket
+    // coalesces whole buckets into core-sized tasks instead of
+    // repartitioning). At 100 TB compaction moves no rows across the network.
     val raw = table.readFilesBucketAligned(spark, fragFiles, parent.schemaId)
     val obs = Observation(s"compact-${parent.version}")
     // null-safe: a null `deleted` must count as live AND survive the rewrite

@@ -315,9 +315,11 @@ object MergeEngine {
     // Tiny epochs also CLAMP shuffle partitions to the table's bucket count
     // (never raising the session's setting): with AQE off there is no
     // runtime coalescing, and a trickle epoch's aggregate shuffles gain
-    // nothing from the cluster-wide default sized for big jobs — the
-    // write-parallelism unit of a tiny epoch IS the bucket. Measured on the
-    // c3 replay at 32-core local: 32→16 partitions cut the query ~15%.
+    // nothing from the cluster-wide default sized for big jobs: the write
+    // packs whole buckets into core-sized tasks (IceTable.writeEpochFiles),
+    // so a shuffle partition finer than a bucket buys no write parallelism.
+    // Measured on the c3 replay at 32-core local: 32→16 partitions cut the
+    // query ~15%.
     val tinyParts: Seq[(String, String)] =
       if (!tinyEpoch) Nil
       else {
@@ -702,51 +704,33 @@ object MergeEngine {
     // full-outer join needs NO exchange on either side: the 100 TB target
     // is read in place per bucket and only the much smaller winner set
     // moves (once, inside the layout shuffle the dedup window also rides).
-    // For a NEAR-EMPTY target the per-bucket task fan-out outweighs the
-    // avoided (tiny) shuffle, so below `spark.graft.alignedScanMinBytes`
-    // (default 16 MiB of touched files, from manifest-recorded sizes) an
-    // explicit repartition of both sides wins. The gate dropped from r2's
-    // 1 GiB: the DSv2 scan removed the per-bucket sub-plan overhead that
-    // penalized small tables (A/B in BENCH.md: aligned 15.5-15.7 s vs
-    // plain 17.0 s at 256 buckets / 2M events / 19k rows).
-    val alignedMinBytes: Long = spark.conf
-      .getOption("spark.graft.alignedScanMinBytes").map(_.toLong)
-      .getOrElse(16L << 20)
-    val touchedBytes = touchedFiles.map(f => math.max(0L, f.bytes)).sum
-    // payload-dedup epochs ALWAYS use the aligned layout when the target has
-    // files: their winner side has no window/rank on top, and
+    // The same layout serves an EMPTY or near-empty target (a first epoch,
+    // a table's first write into a bucket): its buckets scan as empty
+    // partitions, and the write packs the touched buckets into at most
+    // defaultParallelism tasks (IceTable.writeEpochFiles), so no per-bucket
+    // task fan-out is paid. Payload-dedup epochs need this layout in any
+    // case: their winner side has no window/rank on top, and
     // EnsureRequirements strips a bare user repartition directly under a
     // join (rewriting it to a full-key shuffle at the default partition
     // count, which un-clusters the bucket write into ~#buckets files per
     // task — measured 490 files/epoch instead of 16). The KGP layout is an
-    // RDD-level barrier the planner cannot strip, and it is also the
-    // zero-exchange plan.
-    val useAligned = touchedFiles.nonEmpty &&
-      (touchedBytes >= alignedMinBytes || payloadDedup)
+    // RDD-level barrier the planner cannot strip.
     if (timing)
-      System.err.println(s"[timing]   useAligned=$useAligned touchedBytes=" +
-        s"$touchedBytes touched=${touchedFiles.size} skipped=" +
-        s"${skippedFiles.size} payload=$payloadDedup")
+      System.err.println(s"[timing]   touched=${touchedFiles.size} " +
+        s"skipped=${skippedFiles.size} payload=$payloadDedup")
     // the partition-value universe BOTH sides must share: every bucket the
     // winners touch (buckets whose parent files exist but hold no winners
     // are untouched and carried forward — never scanned)
     val alignedBuckets: Seq[Int] = affectedBuckets.toSeq.sorted
-    val current =
-      if (useAligned)
-        table.readFilesBucketAligned(spark, touchedFiles, schemaIdNow,
-          buckets = Some(alignedBuckets))
-      else
-        table.readFiles(spark, touchedFiles, schemaIdNow)
-          .repartition(nBuckets, col("bucket"))
+    val current = table.readFilesBucketAligned(spark, touchedFiles,
+      schemaIdNow, buckets = Some(alignedBuckets))
 
-    // align the winner side with the chosen target layout
+    // lay the winner side out exactly like the target scan
     def alignWinners(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      if (useAligned)
-        org.apache.spark.sql.GraftSqlBridge
-          .dataFrameWithKeyGroupedPartitioning(spark, df, "bucket",
-            alignedBuckets)
-      else df.repartition(nBuckets, $"bucket")
+      org.apache.spark.sql.GraftSqlBridge
+        .dataFrameWithKeyGroupedPartitioning(spark, df, "bucket",
+          alignedBuckets)
 
     val deduped: org.apache.spark.sql.DataFrame =
       if (payloadDedup) {
@@ -855,8 +839,9 @@ object MergeEngine {
         if (mx > 4 * avg) math.min(8, (mx / math.max(1L, avg)).toInt) else 1
       }
     // merged output is already distributed by bucket (the aligned join), so
-    // the write adds NO shuffle — unless hot-bucket salting kicked in, which
-    // trades one extra exchange for write parallelism on the skewed bucket.
+    // the write adds NO shuffle: it coalesces whole buckets into core-sized
+    // tasks — unless hot-bucket salting kicked in, which trades one extra
+    // exchange for write parallelism on the skewed bucket.
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
       System.err.println(merged.queryExecution.executedPlan.toString.take(8000))
     val newFiles = timed("merge+write")(

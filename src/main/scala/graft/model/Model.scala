@@ -152,9 +152,3 @@ final case class LineageRow(
     rowsApplied: Long,
     dedupDrops: Long,
     watermarkLag: Long)
-
-/** Quarantined record + reason — ERR_FILE-style side output of row-level
-  * quality policies (RowLevelPolicy.java:37-45). */
-final case class QuarantineRow(
-    op: String, seq: Long, repo: String, path: String,
-    commit: String, lang: String, content: String, reason: String)

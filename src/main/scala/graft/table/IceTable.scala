@@ -924,23 +924,6 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     pmod(xxhash64(repo, path),
       lit(if (nBuckets > 0) nBuckets else numBuckets)).cast("int")
 
-  /** Write rows (FileRow columns + `bucket`) as data files for `epochId`:
-    * one shuffle keyed by bucket, into a STAGING dir, then publish each file
-    * into `data/bucket=<b>/e<epochId>-<name>` by rename (staging→output
-    * atomicity; a crash mid-publish leaves only unreferenced orphans).
-    * `saltPerBucket > 1` splits each bucket across that many writer tasks
-    * (the north-star "salted repartitioning before the merge-apply stage"):
-    * a Zipf-hot bucket then produces several files in parallel instead of
-    * one straggler task; readers are unaffected (manifests list all files).
-    * Salted files are keyed by an explicit `_salt` staging partition column
-    * (stripped at publish — the data layout stays single-level), so each
-    * file's (saltMod, saltRes) residue class is EXACT and recorded in its
-    * manifest entry: a later epoch whose winners miss the residue skips the
-    * file without opening it (see MergeEngine file skipping).
-    * `alignedByBucket = true` skips the repartition when the input plan is
-    * already hash-partitioned by `bucket` (bucket-aligned MERGE output).
-    * Published entries carry footer stats (rows + key/seq min-max) from one
-    * pooled metadata pass — the skipping/verifier inputs. */
   private val wTiming = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
   private def wTimed[T](name: String)(f: => T): T =
     if (!wTiming) f else {
@@ -951,6 +934,35 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
       r
     }
 
+  /** Write rows (FileRow columns + `bucket`) as data files for `epochId`:
+    * one file per bucket (per salt slice when salted), into a STAGING dir,
+    * then publish each file into `data/bucket=<b>/e<epochId>-<name>` by
+    * rename (staging→output atomicity; a crash mid-publish leaves only
+    * unreferenced orphans).
+    * An unsalted write PACKS buckets into core-sized tasks: at most
+    * `min(buckets, defaultParallelism)` writer tasks, each holding whole
+    * buckets and writing one file per bucket it holds. Most of a small
+    * write task's time is per-task fixed cost (codegen source generation,
+    * task and Hadoop-conf deserialization, output committer set-up), so
+    * one task per bucket paid it 32 times per epoch on a 32-bucket table
+    * where 4 cores can only run 4 tasks at once.
+    * `saltPerBucket > 1` splits each bucket across that many writer tasks
+    * (the north-star "salted repartitioning before the merge-apply stage"):
+    * a Zipf-hot bucket then produces several files in parallel instead of
+    * one straggler task; readers are unaffected (manifests list all files).
+    * Salted files are keyed by an explicit `_salt` staging partition column
+    * (stripped at publish — the data layout stays single-level), so each
+    * file's (saltMod, saltRes) residue class is EXACT and recorded in its
+    * manifest entry: a later epoch whose winners miss the residue skips the
+    * file without opening it (see MergeEngine file skipping).
+    * `alignedByBucket = true` declares that every input partition already
+    * holds whole buckets (bucket-aligned MERGE or compaction output): the
+    * input is then `coalesce`d — narrow, no exchange, each bucket's
+    * partition still lands whole in one task — instead of repartitioned.
+    * Unaligned input is repartitioned by `bucket` into the packed task
+    * count. Salted writes keep their `(bucket, _salt)` fan-out.
+    * Published entries carry footer stats (rows + key/seq min-max) from one
+    * pooled metadata pass — the skipping/verifier inputs. */
   def writeEpochFiles(df: DataFrame, epochId: Long,
       schemaId: Int = SchemaRegistry.baseSchemaId,
       saltPerBucket: Int = 1,
@@ -961,9 +973,11 @@ final class IceTable(val dir: String, val defaultNumBuckets: Int,
     val salted = saltPerBucket > 1
     val staging = new HPath(stagingDir,
       s"e$epochId-${System.nanoTime()}")
+    val nTasks = math.max(1,
+      math.min(nb, df.sparkSession.sparkContext.defaultParallelism))
     val parted =
-      if (alignedByBucket && !salted) df
-      else if (!salted) df.repartition(nb, col("bucket"))
+      if (alignedByBucket && !salted) df.coalesce(nTasks)
+      else if (!salted) df.repartition(nTasks, col("bucket"))
       else df
         .withColumn("_salt",
           pmod(xxhash64(col("path")), lit(saltPerBucket)).cast("int"))

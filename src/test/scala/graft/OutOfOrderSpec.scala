@@ -195,10 +195,15 @@ class OutOfOrderSpec extends SparkSpec {
     // DECLARED epoch slices (claimedRange), which puts every epoch on the
     // tiny-epoch payload-carrying path: one pass over the input, no
     // broadcast, no rank. Must converge to the oracle fold AND keep the
-    // one-file-per-bucket-per-writer write layout (EnsureRequirements
-    // strips a bare repartition under the merge join — the aligned layout
-    // guards it; a blown layout shows up as ~partitions×buckets files).
-    val t = IceTable.create(tmpDir("pl-ooo"), numBuckets = 4)
+    // one-file-per-bucket write layout (EnsureRequirements strips a bare
+    // repartition under the merge join — the aligned layout guards it; a
+    // blown layout shows up as ~partitions×buckets files). With more
+    // buckets than cores, the write packs several whole buckets into each
+    // task, and each bucket must still get exactly one file.
+    val nBuckets = 16
+    val t = IceTable.create(tmpDir("pl-ooo"), numBuckets = nBuckets)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(nBuckets > cores, s"needs more buckets than the $cores cores")
     val sp = spec
     val cdf = ChangeLogGen.zipfCdf(sp.nRepos, sp.zipfExponent)
     val per = sp.nEvents / 4
@@ -206,14 +211,23 @@ class OutOfOrderSpec extends SparkSpec {
       (e.toLong, e * per - 1, if (e == 3) sp.nEvents - 1 else (e + 1) * per - 1))
     Seq(2, 0, 3, 1).foreach { e =>
       val (_, lo, hi) = ranges(e)
-      val out = MergeEngine.applyEpoch(spark, t,
-        spark.range(lo + 1, hi + 1).map(s => ChangeLogGen.eventAt(sp, cdf, s)),
-        epochId = e, nLogPartitions = 4, claimedRange = Some((lo, hi)))
+      val events =
+        spark.range(lo + 1, hi + 1).map(s => ChangeLogGen.eventAt(sp, cdf, s))
+      val touched = events
+        .select(t.bucketCol($"repo", $"path").as("b")).distinct()
+        .as[Int].collect().sorted.toSeq
+      val (out, writeTasks) = resultStageTasks("parquet at IceTable.scala")(
+        MergeEngine.applyEpoch(spark, t, events,
+          epochId = e, nLogPartitions = 4, claimedRange = Some((lo, hi))))
       assert(!out.skipped)
       val epochFiles = out.manifest.files.filter(_.path.contains(s"/e$e-"))
-      assert(epochFiles.size <= 4 + 1,
-        s"epoch $e wrote ${epochFiles.size} files for 4 buckets — the " +
-          "bucket-clustered write layout was lost")
+      assert(epochFiles.map(_.bucket).sorted == touched,
+        s"epoch $e must write exactly one file per touched bucket " +
+          s"(${touched.size} buckets), got buckets " +
+          epochFiles.map(_.bucket).sorted.mkString(","))
+      assert(writeTasks.nonEmpty && writeTasks.forall(_ <= cores),
+        s"epoch $e's write stage must pack its buckets into at most " +
+          s"$cores tasks, ran $writeTasks")
     }
     assert(shaState(t) == oracle,
       "payload-carrying dedup must converge to the oracle fold")

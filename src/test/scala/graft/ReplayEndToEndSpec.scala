@@ -151,7 +151,6 @@ class ReplayEndToEndSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0") // force aligned
     try {
       val t = IceTable.create(tmpDir("align"), numBuckets = 4)
       ReplayJob.replayGenerated(spark, t, spec.copy(nEvents = 4000),
@@ -196,16 +195,14 @@ class ReplayEndToEndSpec extends SparkSpec {
         s"the merge target must be the DSv2 bucket scan:\n$plan")
       assert(mergeSection.contains("ExistingRDD"),
         s"the winner side must be the key-grouped-laid RDD:\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.alignedScanMinBytes")
-      spark.listenerManager.unregister(l)
-    }
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("merge plan stays flat in bucket count (one BatchScan at 128 buckets)") {
     import scala.jdk.CollectionConverters._
     // the r2 construction built numBuckets sub-plans + coalesce(1) each;
-    // the DSv2 scan must keep ONE scan node however many buckets exist
+    // the DSv2 scan must keep ONE scan node however many buckets exist, and
+    // the write must pack the ~100 touched buckets into core-sized tasks
     val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -216,12 +213,17 @@ class ReplayEndToEndSpec extends SparkSpec {
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    spark.conf.set("spark.graft.alignedScanMinBytes", "0")
     try {
       val t = IceTable.create(tmpDir("flat"), numBuckets = 128)
-      ReplayJob.replayGenerated(spark, t,
-        spec.copy(nEvents = 2000, nRepos = 40, nPathsPerRepo = 20),
-        nEpochs = 2, nLogPartitions = 4)
+      val (_, writeTasks) = resultStageTasks("parquet at IceTable.scala")(
+        ReplayJob.replayGenerated(spark, t,
+          spec.copy(nEvents = 2000, nRepos = 40, nPathsPerRepo = 20),
+          nEpochs = 2, nLogPartitions = 4))
+      val cores = spark.sparkContext.defaultParallelism
+      assert(writeTasks.size == 2, s"one write job per epoch: $writeTasks")
+      assert(writeTasks.forall(_ <= cores),
+        s"each epoch's write stage must run at most $cores tasks, not one " +
+          s"per touched bucket: $writeTasks")
       val deadline = System.currentTimeMillis() + 120000
       def planOpt = captured.asScala.find(p =>
         p.contains("FullOuter") && p.contains("graft_bucket_aligned"))
@@ -234,13 +236,12 @@ class ReplayEndToEndSpec extends SparkSpec {
         .toSeq
       assert(mergeSection.count(_.contains("BatchScan")) == 1,
         s"exactly ONE scan node regardless of bucket count:\n$plan")
+      assert(!mergeSection.exists(_.contains("Exchange")),
+        s"packing the write must add no exchange to the merge:\n$plan")
       assert(mergeSection.size < 60,
         s"merge plan must not grow with bucket count " +
           s"(${mergeSection.size} lines):\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.alignedScanMinBytes")
-      spark.listenerManager.unregister(l)
-    }
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("skew: no reducer partition holds a disproportionate share") {
